@@ -30,8 +30,6 @@ random bytes in tests/test_md5np.py.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 
 # fmt: off
@@ -263,10 +261,3 @@ def u28_draws_from_words(
     return out
 
 
-def md5_hashlib_fallback(messages: list[bytes]) -> np.ndarray:
-    """Per-row exact fallback for messages the single-block vector
-    path cannot take (> 55 bytes): (n, 16) uint8 digests."""
-    out = np.empty((len(messages), 16), dtype=np.uint8)
-    for i, msg in enumerate(messages):
-        out[i] = np.frombuffer(hashlib.md5(msg).digest(), dtype=np.uint8)
-    return out

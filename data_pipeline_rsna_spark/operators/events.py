@@ -588,11 +588,15 @@ def acf_lags(
         .selectExpr(
             "lag",
             "n_pairs",
-            # decimal(38,0) arithmetic, BIGINT output: the series is
-            # period-count-bound so the statistics stay ~1e14 here; an
-            # integral output crosses the engine/driver boundary as a
-            # plain int, where DECIMAL(38,0) fetches as python Decimal
-            # in some DuckDB versions and int in others (r12 fix)
+            # decimal(38,0) arithmetic, BIGINT output: n_pairs is
+            # period-count-bound but the period sums scale with SF, so
+            # the statistics (~1e14 at sf0.1 for events_acf_lags) grow
+            # ~7x per SF decade on noisy sums and as SF² on sums that
+            # vary by a fixed fraction — int64 near sf30 in that case,
+            # where the CAST raises CAST_OVERFLOW (ANSI). An integral
+            # output crosses the engine/driver boundary as a plain
+            # int, where DECIMAL(38,0) fetches as python Decimal in
+            # some DuckDB versions and int in others (r12 fix)
             "CAST(n_pairs * _sxy - _sx * _sy AS BIGINT) AS corr_num",
             "CAST(n_pairs * _sxx - _sx * _sx AS BIGINT) AS var_x",
             "CAST(n_pairs * _syy - _sy * _sy AS BIGINT) AS var_y",

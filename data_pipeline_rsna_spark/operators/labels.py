@@ -20,10 +20,8 @@ needed; both aggregations are partial-aggregatable (map-side combine).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..schemas import LABELS_CSV
 
 
 def int_of_float(c: Column) -> Column:
@@ -32,13 +30,6 @@ def int_of_float(c: Column) -> Column:
     double→int cast truncates toward zero, matching CPython. (DuckDB's
     rounds — oracle SQL must use ``trunc()``.)"""
     return c.cast("double").cast("int")
-
-
-def ingest_labels_csv(spark: SparkSession, path: str) -> DataFrame:
-    """O1+O2: scan the labels CSV (header skipped by the reader, not by
-    positional slicing) and apply the typed projection."""
-    raw = spark.read.option("header", "true").schema(LABELS_CSV).csv(path)
-    return typed_labels(raw)
 
 
 def typed_labels(raw: DataFrame) -> DataFrame:

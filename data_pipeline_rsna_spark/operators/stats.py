@@ -289,7 +289,6 @@ def bootstrap_means(
     value_col: str = "value",
     n_replicates: int = 32,
     salt: str = "boot",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Poisson bootstrap of the mean — B deterministic resample
     replicates computed in ONE pass, the only bootstrap that works on
@@ -299,50 +298,40 @@ def bootstrap_means(
     the classical bootstrap and needs no global state.
 
     The weight is a pure function of (row key, replicate, salt): the
-    replicate's 7-hex (28-bit) slice of ``md5(key|salt|group)`` —
-    group = replicate DIV 4, slice = replicate MOD 4 — compared against
-    precomputed truncated-Poisson(1) CDF thresholds in 2^28 units
-    (``POISSON1_T28``). Reproducible in any engine with md5, identical
-    under retries, repartitioning, and subsetting. One digest carries
-    FOUR replicate draws (¼ the hashing of a digest per (row,
-    replicate)), and the draw is compared AS the hex substring —
-    fixed-width lowercase hex orders lexicographically exactly as the
-    integer it spells, so no radix parse runs per draw. Returns one
-    row per replicate: (b, n_eff, mean_cents); the spread of the B
-    means IS the sampling distribution (quantile it driver-side or in
-    a follow-up B-row agg).
+    replicate's 7-hex (28-bit) slice of
+    ``md5(concat_ws('|', key, salt, group))`` — group = replicate DIV
+    4, slice = replicate MOD 4 — compared against precomputed
+    truncated-Poisson(1) CDF thresholds in 2^28 units
+    (``POISSON1_T28``). Reproducible in any engine with md5 (the DuckDB
+    oracle spells it in SQL), identical under retries, repartitioning,
+    and subsetting. One digest carries FOUR replicate draws (¼ the
+    hashing of a digest per (row, replicate)). Returns one row per
+    replicate: (b, n_eff, mean_cents); the spread of the B means IS the
+    sampling distribution (quantile it driver-side or in a follow-up
+    B-row agg).
 
-    Cost: no ×B row explosion exists anywhere — rows fan out only
-    ×ceil(B/4) (one per digest group), each feeding eight accumulators
-    (Σw, Σw·cents per slice) in one map-side-combined aggregate whose
-    shuffle carries ceil(B/4)×partitions partial rows; the B-row
-    result is an unpivot of that. B is the knob: 32 replicates ≈ ±1
-    decile accuracy on the CI endpoints, cheap to raise. Measured
-    lineitem × 32 replicates on a 32-core box: sf0.1 (600 k rows)
-    16.4 s (r10 form) → 2.1 s; sf10 (60 M rows) 60 s for this
-    expression form, whose wall is JVM md5-expression throughput —
-    which is why ``impl='arrow'`` (the default) runs the rounds as
-    numpy vector ops instead: 19 s at sf10, boundary-bound (see
-    :func:`_bootstrap_means_arrow`).  This form stays as the
-    bit-identical differential twin and the no-Python fallback.
+    One ``mapInArrow`` pass runs the md5 rounds themselves as numpy
+    uint32 vector ops (``functions.md5np``) and folds each task's rows
+    into B accumulator pairs — the shuffle carries ≤ B rows per task,
+    no ×B row explosion exists anywhere, and the JVM never evaluates a
+    hash expression. Keys longer than one md5 block (or null —
+    ``concat_ws`` skips nulls, reproduced here) take an exact per-row
+    hashlib fallback, so the vector path never constrains the domain.
+    Measured sf10 (60 M rows × 32 replicates, 32 cores): 60 s for the
+    equivalent SQL-expression form → 19 s, against the DuckDB oracle's
+    8.7 s C-md5 run of the identical plan. The residual is the Arrow
+    boundary itself, not hashing: an IDENTITY mapInArrow over the same
+    (key, cents) projection measures 17 s on that box (6.5 s for two
+    long columns — string keys roughly double it), so further cuts mean
+    moving fewer bytes across the boundary, not faster md5.
     """
-    # fixed-width lowercase hex compares lexicographically identically
-    # to numerically ('0'-'9' < 'a'-'f'), so the draw never leaves
-    # string form: no conv() radix parse per (row, replicate) — the
-    # draw count is B×n, 4× the digest count, and dropping the parse
-    # is worth ~30% end-to-end (measured sf0.1: 3.0 → 2.1 s)
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"bootstrap_means impl must be arrow|sql, got {impl!r}")
     if "'" in salt or "\\" in salt:
-        # the SQL twin interpolates the salt into expression strings;
-        # a quote/backslash would silently change (or break) the hash
-        # domain there while the arrow path accepted it — refuse the
-        # divergence up front for both impls
+        # the salt is part of the hash domain that SQL reproductions
+        # (the DuckDB oracle) spell as a string literal; a quote or
+        # backslash cannot be written there as the same bytes
         raise ValueError(
             "bootstrap_means salt must not contain quotes/backslashes"
         )
-    h0, h1, h2, h3 = (format(t, "07x") for t in POISSON1_T28)
-    groups = (n_replicates + 3) // 4
     base = df.select(
         key_expr.cast("string").alias("_k"),
         cents(value_col).alias("cents"),
@@ -355,6 +344,7 @@ def bootstrap_means(
     # and only when the input is narrower than that (a 100 TB scan is
     # already wider than the cluster; re-shuffling it would be the
     # bottleneck, not the fix). The shuffle moves only (key, cents).
+    groups = (n_replicates + 3) // 4
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     size = int(
@@ -363,85 +353,6 @@ def bootstrap_means(
     want = max(cores // 2, min(cores, size * groups // (32 << 20)))
     if base.rdd.getNumPartitions() < want:
         base = base.repartition(want)
-    if impl == "arrow":
-        return _bootstrap_means_arrow(base, n_replicates, salt)
-    # one md5 per (row, group): explode only the ×ceil(B/4) group
-    # index (ints — never an array of structs), bind the digest ONCE
-    # per row via a single-element-array lambda (a bare alias would be
-    # inlined 8× by the CASE chains below), and slice the four weights
-    # into one small int array. The ×B row explosion never exists:
-    # each (row, group) row feeds EIGHT accumulators (Σw, Σw·cents per
-    # slice), so the aggregate sees ceil(B/4)·n rows and emits
-    # ceil(B/4) rows that unpivot to B. Measured sf10 (60 M rows):
-    # 87 s → 60 s vs the flatten-struct explode form — the per-row
-    # array-of-struct churn and the B×n generate were ~30% at scale.
-    case = (
-        f"CASE WHEN s < '{h0}' THEN 0 WHEN s < '{h1}' THEN 1 "
-        f"WHEN s < '{h2}' THEN 2 WHEN s < '{h3}' THEN 3 ELSE 4 END"
-    ).replace("s <", "substr(d, j * 7 + 1, 7) <")
-    ws = (
-        "transform(array(md5(concat_ws('|', _k, '"
-        + salt
-        + "', CAST(_g AS STRING)))), "
-        "d -> transform(sequence(0, 3), j -> " + case + "))[0] AS _ws"
-    )
-    rep = base.select(
-        "_k",
-        "cents",
-        F.expr(f"explode(sequence(0, {groups - 1}))").alias("_g"),
-    ).selectExpr("cents", "_g", ws)
-    aggs = []
-    for j in range(4):
-        aggs.append(
-            F.sum(F.expr(f"element_at(_ws, {j + 1})")).alias(f"n{j}")
-        )
-        aggs.append(
-            F.sum(F.expr(f"element_at(_ws, {j + 1}) * cents")).alias(
-                f"s{j}"
-            )
-        )
-    stacked = (
-        rep.groupBy("_g")
-        .agg(*aggs)
-        .selectExpr(
-            "_g",
-            "stack(4, 0, n0, s0, 1, n1, s1, 2, n2, s2, 3, n3, s3) "
-            "AS (_j, n_eff, sum_cents)",
-        )
-    )
-    return (
-        stacked.selectExpr(
-            "_g * 4 + _j AS b",
-            "n_eff",
-            "CAST(sum_cents DIV n_eff AS BIGINT) AS mean_cents",
-        )
-        .filter(F.col("b") < n_replicates)
-    )
-
-
-def _bootstrap_means_arrow(
-    base: DataFrame, n_replicates: int, salt: str
-) -> DataFrame:
-    """The scale path of :func:`bootstrap_means`: one ``mapInArrow``
-    pass runs the md5 rounds themselves as numpy uint32 vector ops
-    (``functions.md5np``) and folds each task's rows into B
-    accumulator pairs — the shuffle carries ≤ B rows per task and the
-    JVM never evaluates a hash expression.  Values are IDENTICAL to
-    the SQL-expression form (``impl='sql'``): same md5, same 7-hex
-    28-bit slices, same thresholds, integer sums in the same
-    associative order class — pinned by the twin test and by the
-    unchanged DuckDB oracle.  Keys longer than one md5 block (or null
-    — ``concat_ws`` skips nulls, reproduced here) take an exact
-    per-row hashlib fallback, so the vector path never constrains the
-    domain.  Measured sf10 (60 M rows × 32 replicates, 32 cores):
-    60 s (expression form) → 19 s, against the DuckDB oracle's 8.7 s
-    C-md5 run of the identical plan.  The residual is the Arrow
-    boundary itself, not hashing: an IDENTITY mapInArrow over the
-    same (key, cents) projection measures 17 s on this box (6.5 s for
-    two long columns — string keys roughly double it), so the hash
-    work rides nearly free and further cuts mean moving fewer bytes
-    across the boundary, not faster md5."""
-    groups = (n_replicates + 3) // 4
     B = n_replicates
     salt_b = salt.encode()
     t28_list = list(POISSON1_T28)
@@ -497,7 +408,7 @@ def _bootstrap_means_arrow(
             nn_cents += n - carr.null_count
             if carr.null_count:
                 # null cents contribute weight to n_eff but 0 to the
-                # sum — exactly sum()'s null-skipping in the SQL form
+                # sum — exactly SQL sum()'s null-skipping
                 cents = carr.fill_null(0).to_numpy(
                     zero_copy_only=False
                 ).astype(np.int64, copy=False)
@@ -580,11 +491,10 @@ def _bootstrap_means_arrow(
     out = base.mapInArrow(
         _partials, schema="b int, n_eff long, sum_cents long, n_cents long"
     )
-    # sum(w*cents) in the SQL twin is NULL exactly when NO row has a
-    # non-null cents (sum() over an all-NULL term list); fill_null(0)
-    # in the vector path would otherwise turn that into mean 0 —
-    # n_cents carries the non-null row count so the degenerate case
-    # stays value-identical to the SQL form (r11 review).
+    # the SQL definition's sum(w*cents) is NULL exactly when NO row has
+    # a non-null cents (sum() over an all-NULL term list); fill_null(0)
+    # above would otherwise turn that into mean 0 — n_cents carries the
+    # non-null row count so the degenerate case stays NULL.
     return (
         out.groupBy("b")
         .agg(

@@ -1725,9 +1725,7 @@ def q_similarity_topk_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     "within probed cells. Same storage-pruning shape as k-means IVF "
     "(cell-partitioned layout, (nlist-nprobe)/nlist of files pruned per "
     "probe) but the quantizer is engine-reproducible, so the whole ANN "
-    "search is value-hash-checkable. The learned k-means variant "
-    "(build_ivf/ivf_topk) remains the production path when a trained "
-    "codebook exists; recall vs brute force asserted in tests for both.",
+    "search is value-hash-checkable.",
     tags=("similarity",),
 )
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3296,7 +3294,7 @@ def q_augmentation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="O33 round-robin shard assignment (images_to_tfrecord.py:252: "
     "idx % num_shards, 32 val shards): faithful modulo-of-global-index "
-    "semantics; hash_shards is the scale path.",
+    "semantics.",
     tags=("core",),
 )
 def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6775,12 +6773,19 @@ def q_events_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "event_type",
         F.col("n").cast("bigint").alias("n"),
-        # accumulation stays decimal(38,0); the OUTPUT is bigint — the
-        # values are ~2e11 at sf0.1 (7 decades of int64 headroom through
-        # sf1000), and an integral column crosses every engine/driver
-        # boundary as a plain python int, where DECIMAL(38,0) is fetched
-        # as Decimal by some DuckDB versions and int by others (r12 fix,
-        # same class as privacy_t_closeness)
+        # accumulation stays decimal(38,0); the OUTPUT is bigint, so the
+        # final CAST bounds the safe scale. Both statistics are n² times
+        # a (co)variance over a fixed date range, so they grow as SF².
+        # Measured at sf0.1: |slope_num| <= 1.9e11, slope_den ~3.1e10
+        # (slope_den x100 per SF decade from sf0.001; slope_num x24-x44,
+        # its covariance being mostly noise here, at most x100). int64
+        # holds 9.2e18, so slope_num reaches it near sf700 and
+        # slope_den near sf1700; past that the CAST raises
+        # CAST_OVERFLOW (ANSI), never a wrap or NULL. An integral column
+        # crosses every engine/driver boundary as a plain python int,
+        # where DECIMAL(38,0) is fetched as Decimal by some DuckDB
+        # versions and int by others (r12 fix, same class as
+        # privacy_t_closeness)
         (F.col("n") * F.col("stv") - F.col("st") * F.col("sv"))
         .cast("bigint")
         .alias("slope_num"),
@@ -7391,9 +7396,14 @@ def q_events_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select(
         "n_pairs",
-        # decimal(38,0) arithmetic, BIGINT output: values are ~1e14 at
-        # sf0.1 (daily-sum pairs are day-count-bound, not row-bound), and
-        # an integral column crosses the engine/driver boundary as a
+        # decimal(38,0) arithmetic, BIGINT output: n_pairs is fixed by
+        # the day count (29), but the daily sums scale with SF, so each
+        # statistic is n_pairs² times a (co)variance of daily sums:
+        # ~1e14 at sf0.1, growing ~7x per SF decade on this data (the
+        # day-to-day spread is noise, ∝ SF). Daily sums that vary by a
+        # fixed fraction grow it as SF² instead, reaching int64 (9.2e18)
+        # near sf30, where the final CAST raises CAST_OVERFLOW (ANSI).
+        # An integral column crosses the engine/driver boundary as a
         # plain int — DECIMAL(38,0) fetches as python Decimal in some
         # DuckDB versions and int in others (r12 fix)
         (dec(F.col("n_pairs")) * dec(F.col("sxy")) - dec(F.col("sx")) * dec(F.col("sy")))
@@ -9486,11 +9496,14 @@ def q_text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         F.col("n").cast("bigint").alias("vocab_n"),
         # decimal(38,0) accumulation, BIGINT output: the statistics are
-        # vocabulary-bound (~7e14 here, and the log-compressed x/y keep
-        # them ~V·(1e6·lnV)² — int64-safe for any realistic vocab); an
-        # integral output column crosses the engine/driver boundary as
-        # a plain int, where DECIMAL(38,0) fetches as python Decimal in
-        # some DuckDB versions and int in others (r12 fix)
+        # vocabulary-bound, not SF-bound — n = V distinct tokens and
+        # slope_den = V²·Var(1e6·ln r) ≈ V²·1e12 (Var(ln r) -> 1). The
+        # synthetic corpus has V = 31 at every SF (slope_den ~6.8e14 at
+        # sf0.01 and sf0.1); a vocabulary past ~3,000 distinct tokens
+        # exceeds int64 and the final CAST raises CAST_OVERFLOW (ANSI).
+        # An integral output column crosses the engine/driver boundary
+        # as a plain int, where DECIMAL(38,0) fetches as python Decimal
+        # in some DuckDB versions and int in others (r12 fix)
         (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
         .cast("bigint")
         .alias("slope_num"),
@@ -9906,7 +9919,7 @@ def q_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS median_cents
     """,
     doc="Exact global median (lower median, rank ceil(n/2)) of a fact "
-    "column in integer cents via relational.py::exact_kth_smallest - "
+    "column in integer cents via relational.py::exact_rank_statistic - "
     "the order statistic computed by iterative histogram refinement: "
     "~3 narrow metadata-sized aggregation rounds with range predicates "
     "pushed into the scan, NO global sort, NO shuffle of data rows at "
@@ -10942,8 +10955,8 @@ def q_feature_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repartitioning. The default impl runs the md5 rounds as numpy "
     "uint32 vector ops in one mapInArrow pass (functions/md5np.py) "
     "and folds each task into B accumulator pairs - <= B rows shuffle "
-    "per task, never B x n anywhere; the SQL-expression twin "
-    "(impl='sql') is pinned value-identical in tests. The spread of "
+    "per task, never B x n anywhere; a pure-Python hashlib reference "
+    "pins the weights in tests. The spread of "
     "the 32 means IS the sampling distribution of the estimator.",
     tags=("stats", "sampling"),
 )
@@ -11073,10 +11086,8 @@ def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic in exact milli-unit BIGINTs; map-side partial top-k "
     "before the k*|q|-row ranking window. Complements srp_ivf_topk "
     "(storage pruning) — IVF chooses WHAT to scan, PQ shrinks what "
-    "each scanned row costs. This gate variant value-checks the "
-    "code/ADC pipeline; the production quantizer is train_pq (per-"
-    "subspace Lloyd on a bounded deterministic sample, recall-floor "
-    "tested like build_ivf).",
+    "each scanned row costs. The sample-initialized codebook keeps the "
+    "whole code/ADC pipeline value-checkable.",
     tags=("similarity",),
 )
 def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11749,6 +11760,10 @@ def q_market_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sx",
         "CAST(2 * six - (n + 1) * sx AS BIGINT) AS gini_num",
+        # n and sx both grow with SF, so n * sx (and six) grow as SF²:
+        # gini_den is 3.0e15 at sf0.1 (x100 per SF decade from
+        # sf0.001), so this bigint multiply passes int64 near sf5 and
+        # raises ARITHMETIC_OVERFLOW (ANSI)
         "CAST(n * sx AS BIGINT) AS gini_den",
         # ppm in decimal(38,0): gini_num carries data-scaled cent
         # totals, so num*1e6 passes int64 around sf0.1 (caught by the

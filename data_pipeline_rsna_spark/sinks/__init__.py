@@ -1,1 +1,2 @@
-"""Sinks: sharded writers (O33) and the TFRecord container format (O35)."""
+"""Sinks: round-robin shard assignment (O33), the TFRecord container
+format (O35), the PNG and JSON sinks, and the bucketed-table layout."""

@@ -56,21 +56,9 @@ BOX_ANNOTATIONS_SCHEMA = T.StructType(
     ]
 )
 
-CAPTION_ANNOTATIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("patient_id", T.StringType()),
-        T.StructField("target", T.StringType()),
-    ]
-)
-
-
 def read_box_annotations_json(spark: SparkSession, path: str) -> DataFrame:
     """O23: line-delimited box-annotation JSON with explicit schema."""
     return spark.read.schema(BOX_ANNOTATIONS_SCHEMA).json(path)
-
-
-def read_caption_annotations_json(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(CAPTION_ANNOTATIONS_SCHEMA).json(path)
 
 
 # ---------------------------------------------------------------------------

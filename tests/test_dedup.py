@@ -81,6 +81,44 @@ def test_connected_components_chain_and_clique(spark):
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_matches_union_find(spark):
+    """Parity with a Python union-find on a seeded random graph (~60
+    edges) that includes a 12-node chain with its minimum id at one
+    end, so the min label needs 11 propagation rounds to reach the far
+    end. Every node must be labelled with the minimum id of its
+    component."""
+    import random
+
+    rng = random.Random(1729)
+    pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(48)]
+    pairs = [(a, b) for a, b in pairs if a != b]
+    chain = [100] + rng.sample(range(101, 200), 11)
+    pairs += list(zip(chain, chain[1:]))
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # root = min id
+    want = {n: find(n) for n in parent}
+
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    got = {
+        r.node: r.component
+        for r in dedup.connected_components(edges).collect()
+    }
+    assert got == want
+    assert all(got[n] == 100 for n in chain)
+
+
 def test_dedup_clusters_planted(spark):
     rows = [(i, f"alpha beta gamma delta epsilon zeta {i}") for i in range(8)]
     # 100/101 share almost-identical long text with 0 and with each other

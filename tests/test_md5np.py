@@ -64,7 +64,10 @@ def test_u28_draws_match_hex_substring_semantics():
 def test_hashlib_fallback_and_packer_agree():
     messages = [b"x" * 55, b"", b"abc"]
     vec = md5np.md5_digest_bytes(_pack(messages))
-    fb = md5np.md5_hashlib_fallback(messages)
+    fb = np.array(
+        [np.frombuffer(hashlib.md5(m).digest(), dtype=np.uint8)
+         for m in messages]
+    )
     assert (vec == fb).all()
 
 

@@ -241,23 +241,6 @@ def test_multiformat_partitioned_write_prunes(spark, tmp_path):
     assert "part=2" in plan or "PartitionFilters" in plan
 
 
-def test_schema_evolution_merged_read(spark, tmp_path):
-    from data_pipeline_rsna_spark.sources import formats
-
-    path = str(tmp_path / "evolving")
-    spark.range(3).selectExpr("id", "id * 2 AS a").write.parquet(
-        path + "/batch=1"
-    )
-    spark.range(3, 6).selectExpr(
-        "id", "id * 2 AS a", "id * 10 AS b"
-    ).write.parquet(path + "/batch=2")
-    got = formats.read_merged_schema(spark, path)
-    assert {f.name for f in got.schema.fields} >= {"id", "a", "b"}
-    rows = {r.id: (r.a, r.b) for r in got.collect()}
-    assert rows[0] == (0, None)  # old rows null-fill the new column
-    assert rows[5] == (10, 50)
-
-
 @pytest.mark.slow
 def test_python_datasource_partitioned_and_deterministic(spark):
     from pyspark.sql import functions as F

@@ -186,15 +186,19 @@ def test_column_profiles_nulls_and_distincts(spark):
 def test_bootstrap_weights_match_python_md5_reference(spark):
     """End-to-end weight check: bootstrap_means' md5/threshold chain
     must produce exactly the truncated-Poisson weights a direct Python
-    md5 evaluation yields — per replicate, for arbitrary keys."""
+    md5 evaluation of ``concat_ws('|', key, salt, group)`` yields — per
+    replicate, for arbitrary keys (including the ones the vector path
+    hands to its hashlib fallback) and with null values."""
     import hashlib
 
     from data_pipeline_rsna_spark.operators.stats import POISSON1_T28
 
-    def w_of(key: str, b: int) -> int:
+    def w_of(key, b: int) -> int:
         # one digest per group of four replicates; replicate b reads
-        # the (b mod 4)-th 7-hex (28-bit) slice of md5(key|salt|b//4)
-        dig = hashlib.md5(f"{key}|boot|{b // 4}".encode()).hexdigest()
+        # the (b mod 4)-th 7-hex (28-bit) slice of md5(key|salt|b//4);
+        # concat_ws skips a NULL key
+        parts = [p for p in (key, "boot", str(b // 4)) if p is not None]
+        dig = hashlib.md5("|".join(parts).encode()).hexdigest()
         j = b % 4
         u = int(dig[j * 7 : j * 7 + 7], 16)
         for k, t in enumerate(POISSON1_T28):
@@ -202,27 +206,51 @@ def test_bootstrap_weights_match_python_md5_reference(spark):
                 return k
         return 4
 
+    def expected(rows, n_rep):
+        out = {}
+        for b in range(n_rep):
+            ws = [w_of(k, b) for k, _ in rows]
+            # a NULL value adds weight to n_eff but nothing to the sum
+            terms = [
+                w * round(v * 100) for w, (_, v) in zip(ws, rows)
+                if v is not None
+            ]
+            out[b] = (sum(ws), sum(terms) // sum(ws) if terms else None)
+        return out
+
+    def run(rows, n_rep):
+        df = spark.createDataFrame(rows, "k string, value double")
+        return {
+            r.b: (r.n_eff, r.mean_cents)
+            for r in st.bootstrap_means(
+                df, F.col("k"), n_replicates=n_rep
+            ).collect()
+        }
+
     keys = [str(i * 7919) for i in range(50)]
-    df = spark.createDataFrame(
-        [(k, (i + 1) * 1.0) for i, k in enumerate(keys)],
-        "k string, value double",
-    )
+    # NULL key (concat_ws skips it), empty key, multi-byte UTF-8 key,
+    # keys either side of the single-block limit (48 bytes + the
+    # 7-byte "|boot|g" suffix = 55 fits; 49 does not) and keys far
+    # past it; the NULL and oversize keys take the hashlib fallback
+    edge = [None, "", "κλειδί-μακρύ", "a" * 48, "b" * 49] + [
+        "k" * 80 + str(i) for i in range(5)
+    ]
+    rows = [(k, (i + 1) * 1.0) for i, k in enumerate(keys + edge)]
     # 6 replicates: spans a digest-group boundary (b=4,5 read the
     # second digest) AND a partial group (6 % 4 != 0 exercises the
     # b < n_replicates trim)
-    got = {
-        r.b: (r.n_eff, r.mean_cents)
-        for r in st.bootstrap_means(
-            df, F.col("k"), n_replicates=6
-        ).collect()
-    }
+    got = run(rows, 6)
     assert sorted(got) == list(range(6))
-    for b in range(6):
-        ws = [w_of(k, b) for k in keys]
-        n_eff = sum(ws)
-        cents = [(i + 1) * 100 for i in range(50)]
-        mean = sum(w * c for w, c in zip(ws, cents)) // n_eff
-        assert got[b] == (n_eff, mean), (b, got[b], (n_eff, mean))
+    assert got == expected(rows, 6)
+
+    mixed = [(k, None if i % 3 else float(i)) for i, k in enumerate(keys)]
+    assert run(mixed, 4) == expected(mixed, 4)
+
+    # all-null values: mean_cents is NULL (SQL sum over no terms), not 0
+    all_null = [(k, None) for k in keys[:10]]
+    got = run(all_null, 4)
+    assert got == expected(all_null, 4)
+    assert all(mean is None for _, mean in got.values())
 
 
 def test_ks_by_group_matches_per_segment_global(spark):
@@ -623,63 +651,6 @@ def test_t_closeness_division_rounding_boundary(spark):
     assert isinstance(a.emd_num, int) and isinstance(a.t_ppm, int)
 
 
-def test_bootstrap_arrow_and_sql_twins_match(spark):
-    """The mapInArrow vector-md5 path and the SQL-expression path must
-    produce identical replicate tables — including null keys
-    (concat_ws skips them), empty-string keys, unicode keys, and keys
-    past the single-block limit (hashlib fallback)."""
-    rows = (
-        [(None, 10.0), ("", 7.0), ("κλειδί-μακρύ", 3.25)]
-        + [("k" * 80 + str(i), float(i)) for i in range(5)]
-        + [(f"key{i}", float(i) * 1.5) for i in range(300)]
-    )
-    df = spark.createDataFrame(rows, "k string, value double")
-    a = sorted(
-        map(
-            tuple,
-            st.bootstrap_means(
-                df, F.col("k"), n_replicates=6, impl="arrow"
-            ).collect(),
-        )
-    )
-    s = sorted(
-        map(
-            tuple,
-            st.bootstrap_means(
-                df, F.col("k"), n_replicates=6, impl="sql"
-            ).collect(),
-        )
-    )
-    assert a == s
-    assert len(a) == 6
-
-
-def test_bootstrap_twins_match_on_null_values(spark):
-    """Degenerate but legal inputs: some/all NULL values. With ALL
-    values null the SQL form's sum(w*cents) is NULL, so mean_cents
-    must be NULL — the arrow path's fill_null(0) must not turn it
-    into 0 (r11 review); with MIXED nulls both paths must agree on
-    the null-skipping mean."""
-    for rows in (
-        [(f"key{i}", None) for i in range(50)],
-        [(f"key{i}", None if i % 3 else float(i)) for i in range(50)],
-    ):
-        df = spark.createDataFrame(rows, "k string, value double")
-        a = sorted(map(tuple, st.bootstrap_means(
-            df, F.col("k"), n_replicates=4, impl="arrow").collect()))
-        s = sorted(map(tuple, st.bootstrap_means(
-            df, F.col("k"), n_replicates=4, impl="sql").collect()))
-        assert a == s
-    # the all-null case really is NULL, not 0
-    df = spark.createDataFrame(
-        [("k1", None), ("k2", None)], "k string, value double"
-    )
-    out = st.bootstrap_means(
-        df, F.col("k"), n_replicates=4, impl="arrow"
-    ).collect()
-    assert all(r["mean_cents"] is None for r in out)
-
-
 def test_bootstrap_rejects_sql_breaking_salt(spark):
     import pytest
 
@@ -688,9 +659,3 @@ def test_bootstrap_rejects_sql_breaking_salt(spark):
         st.bootstrap_means(df, F.col("k"), salt="o'boot")
 
 
-def test_bootstrap_rejects_unknown_impl(spark):
-    import pytest
-
-    df = spark.createDataFrame([("k", 1.0)], "k string, value double")
-    with pytest.raises(ValueError):
-        st.bootstrap_means(df, F.col("k"), impl="Arrow")

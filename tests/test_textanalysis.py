@@ -20,8 +20,22 @@ def docs(spark):
     )
 
 
+def _by_id(df, **cols):
+    return {
+        r.doc_id: r
+        for r in df.select(
+            "doc_id", *[c.alias(name) for name, c in cols.items()]
+        ).collect()
+    }
+
+
 def test_token_counts(docs):
-    rows = {r.doc_id: r for r in tx.text_features(docs).collect()}
+    rows = _by_id(
+        docs,
+        n_ws_tokens=tx.ws_token_count("text"),
+        n_bpe_tokens=tx.bpe_ish_token_count("text"),
+        ttr=tx.type_token_ratio("text"),
+    )
     assert rows[1].n_ws_tokens == 8
     # "x1 hello-world 42" -> x,1,hello,-,world,42
     assert rows[4].n_bpe_tokens == 6
@@ -29,7 +43,11 @@ def test_token_counts(docs):
 
 
 def test_stopword_and_lang(docs):
-    rows = {r.doc_id: r for r in tx.text_features(docs).collect()}
+    rows = _by_id(
+        docs,
+        en_stopword_ratio=tx.stopword_ratio("text"),
+        predicted_lang=tx.predicted_lang("text"),
+    )
     # doc1: 'the','and','the' are en stopwords -> 3/8
     assert rows[1].en_stopword_ratio == round(3 / 8, 6)
     assert rows[1].predicted_lang == "en"
@@ -42,7 +60,11 @@ def test_fingerprints_order_insensitive(spark):
         [(1, "alpha beta gamma"), (2, "gamma beta alpha")],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in tx.text_features(a).collect()}
+    rows = _by_id(
+        a,
+        content_fp=tx.content_fingerprint("text"),
+        winnow_fp=tx.min_shingle_fingerprint("text"),
+    )
     # same bag of words -> same content fingerprint
     assert rows[1].content_fp == rows[2].content_fp
     # different shingles -> (almost surely) different winnow fingerprint
