@@ -30,6 +30,12 @@ def write_png_dir(images: DataFrame, path: str) -> DataFrame:
     from ..operators.multimodal import encode_png
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        # a retried or speculated attempt writes its own temp file (the
+        # task attempt id is unique across stage and task retries) and
+        # renames it over the final name, never into a half-written one
+        suffix = f".tmp-{TaskContext.get().taskAttemptId()}"
         os.makedirs(path, exist_ok=True)
         for pdf in batches:
             out = []
@@ -39,8 +45,9 @@ def write_png_dir(images: DataFrame, path: str) -> DataFrame:
                 )
                 png = encode_png(arr)
                 fn = os.path.join(path, f"{r.img_id}.png")
-                with open(fn, "wb") as f:
+                with open(fn + suffix, "wb") as f:
                     f.write(png)
+                os.replace(fn + suffix, fn)
                 out.append((r.img_id, fn, len(png)))
             yield pd.DataFrame(out, columns=["img_id", "file", "n_bytes"])
 

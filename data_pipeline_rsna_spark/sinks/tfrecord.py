@@ -537,30 +537,45 @@ def _frame_examples(chunk: list[bytes]):
 
 
 def write_tfrecord_shards(df, out_dir: str, num_shards: int,
-                          to_features) -> None:
-    """O33: one ``-%05d-of-%05d.tfrecord`` file per shard (the
-    reference's shard filename pattern, images_to_tfrecord.py:229).
+                          to_features) -> int:
+    """O33: exactly ``num_shards`` files named ``data-%05d-of-%05d.tfrecord``
+    (the reference's shard filename pattern, images_to_tfrecord.py:229).
     ``to_features(row) -> dict[str, list]`` maps a row to its Example
-    feature dict (attribute or item access). Runs on executors — no
-    driver materialization.
+    feature dict (attribute or item access). Returns the number of
+    records written. Runs on executors — no driver materialization.
 
     Both JVM↔Python crossings are Arrow (``mapInArrow``), not pickled
-    Rows (round 12, guide §4.1 — the ``df.rdd`` ingress was the last
-    pickled-Row boundary in the engine): encode receives columnar
-    batches at the INPUT's parallelism, the framed byte blobs shuffle
-    as binary rows into ``num_shards`` writer tasks, and the writer
-    receives Arrow binary batches and appends them to disk. Encoding
-    at input parallelism (not inside the writers) keeps the CPU-heavy
-    step decoupled from the file-count contract; the proto encode
-    itself stays per-record python (~15% of the pre-batch-CRC cost),
-    while the CRCs — the dominant cost — run through the lockstep
-    numpy kernel over ~8k-record chunks."""
+    Rows. Encode runs at the INPUT's parallelism: per-record python
+    proto encode, then the CRCs — the dominant cost — through the
+    lockstep numpy kernel over ~8k-record chunks.
+
+    A record's shard is ``pmod(hash(xxhash64(blob)), num_shards)``:
+    content-keyed, so retried or speculated tasks reproduce the same
+    record→shard assignment (guide §2.5 — no rand()-derived keys).
+    The blobs shuffle on that shard id into ``min(num_shards,
+    defaultParallelism)`` writer tasks, sorted by (shard, blob), and
+    each writer streams its rows into one file per shard — the
+    reference's one-process writer pool (images_to_tfrecord.py:228-231)
+    spread over the cores. Every Python task pays a fixed start cost of
+    a few hundred ms, so one task per shard made the sink's time a
+    function of the file count; here it scales with the cores. The
+    blob sort makes each shard's bytes independent of the input
+    partitioning and of retries.
+
+    Commit: a writer fills each shard under a temp name carrying its
+    task attempt id (unique across stage and task retries) and
+    ``os.replace``s it into place once the shard is complete; a failing
+    attempt removes its temp file. The driver then creates the shards
+    no record hashed to as zero-record files and raises unless
+    ``out_dir`` holds exactly the ``num_shards`` expected names."""
     import os
 
     from pyspark.sql import functions as F
 
     os.makedirs(out_dir, exist_ok=True)
     cols = list(df.columns)
+    names = [f"data-{i:05d}-of-{num_shards:05d}.tfrecord"
+             for i in range(num_shards)]
 
     def _encode_batches(batches):
         import pyarrow as pa
@@ -591,39 +606,76 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int,
                     yield from _flush()
         yield from _flush()
 
-    # shuffle the framed blobs into exactly num_shards writer
-    # partitions, HASH-partitioned on the blob bytes: content-keyed,
-    # so retried/speculated tasks reproduce the same record→shard
-    # assignment (guide §2.5 — no rand()-derived keys), and unlike a
-    # DataFrame round-robin repartition it pays no
-    # sortBeforeRepartition local sort of the blobs. Distinct records
-    # hash ~uniformly, so shards balance for real data (a degenerate
-    # all-identical-records input would co-locate; acceptable).
-    framed = (
-        df.select(cols)
-        .mapInArrow(_encode_batches, "blob binary")
-        .repartition(num_shards, F.xxhash64("blob"))
-    )
-
     def _write_batches(batches):
+        import numpy as np
         import pyarrow as pa
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(
-            out_dir, f"data-{pid:05d}-of-{num_shards:05d}.tfrecord"
-        )
-        n = 0
-        # the file is created even for an EMPTY partition — an empty
-        # shard is a valid TFRecord file and the -of-%05d contract
-        # promises num_shards files (same as the old foreachPartition)
-        with open(fname, "wb") as f:
+        suffix = f".tmp-{TaskContext.get().taskAttemptId()}"
+        written: dict[int, int] = {}   # shard -> records, in write order
+        f = tmp = final = None
+        try:
             for batch in batches:
-                col = batch.column(0)
-                for blob in col:
-                    f.write(blob.as_py())
-                n += batch.num_rows
-        yield pa.record_batch([pa.array([n], type=pa.int64())],
-                              names=["n_written"])
+                shard = batch.column(0).to_numpy()
+                blob = batch.column(1)
+                # rows arrive sorted by shard: one run per shard change
+                # (shard ids are >= 0, so the -1 pads mark both ends)
+                edges = np.flatnonzero(
+                    np.diff(shard, prepend=-1, append=-1)
+                ).tolist()
+                for a, b in zip(edges, edges[1:]):
+                    s = int(shard[a])
+                    if s not in written:
+                        if f is not None:
+                            f.close()
+                            os.replace(tmp, final)
+                        final = os.path.join(out_dir, names[s])
+                        tmp = final + suffix
+                        f = open(tmp, "wb")
+                        written[s] = 0
+                    f.writelines(blob.slice(a, b - a).to_pylist())
+                    written[s] += b - a
+            if f is not None:
+                f.close()
+                os.replace(tmp, final)
+        except BaseException:
+            if f is not None:
+                f.close()
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+            raise
+        yield pa.record_batch(
+            [pa.array(list(written), type=pa.int32()),
+             pa.array(list(written.values()), type=pa.int64())],
+            names=["shard", "n_written"],
+        )
 
-    framed.mapInArrow(_write_batches, "n_written long").collect()
+    shard = F.pmod(F.hash(F.xxhash64("blob")), F.lit(num_shards))
+    writers = min(num_shards, df.sparkSession.sparkContext.defaultParallelism)
+    framed = (
+        df.select(cols)
+        .mapInArrow(_encode_batches, "blob binary")
+        .select(shard.alias("shard"), "blob")
+        .repartition(writers, "shard")
+        .sortWithinPartitions("shard", "blob")
+    )
+    written = {
+        r.shard: r.n_written
+        for r in framed.mapInArrow(
+            _write_batches, "shard int, n_written long"
+        ).collect()
+    }
+    for i, name in enumerate(names):
+        if i not in written:
+            open(os.path.join(out_dir, name), "wb").close()
+    # temp files of attempts killed before they could clean up
+    for name in os.listdir(out_dir):
+        if ".tfrecord.tmp-" in name:
+            os.remove(os.path.join(out_dir, name))
+    found = sorted(os.listdir(out_dir))
+    if found != names:
+        raise RuntimeError(
+            f"{out_dir} holds {len(found)} entries, expected exactly the "
+            f"{num_shards} shard files {names[0]} .. {names[-1]}"
+        )
+    return sum(written.values())

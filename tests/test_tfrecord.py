@@ -63,10 +63,8 @@ def test_write_tfrecord_shards(spark, tmp_path):
 def test_write_tfrecord_shards_empty_shards(spark, tmp_path):
     """num_shards > rows: every shard file must still exist (the
     -of-%05d contract), the empty ones as valid zero-record TFRecord
-    files — pins the Arrow writer running for EMPTY partitions too
-    (round 12: the pickled-Row foreachPartition ingress became
-    mapInArrow; an Arrow writer that skips empty partitions would
-    silently break the shard-count contract)."""
+    files — shards no record hashed to get no writer rows at all, so
+    the sink must create them itself."""
     df = spark.range(3).selectExpr("id")
     out = str(tmp_path / "eshards")
     tfr.write_tfrecord_shards(df, out, 6, lambda r: {"id": [r["id"]]})
@@ -74,6 +72,99 @@ def test_write_tfrecord_shards_empty_shards(spark, tmp_path):
     assert len(files) == 6
     counts = [len(tfr.read_tfrecords(f)) for f in files]
     assert sum(counts) == 3
+
+
+def test_write_tfrecord_shards_assignment_pinned(spark, tmp_path):
+    """Every record lands in shard pmod(hash(xxhash64(framed blob)),
+    num_shards) — the content-keyed assignment, recomputed here in
+    Spark SQL over blobs framed on the driver."""
+    from collections import Counter
+
+    def to_features(r):
+        return {"id": [r["id"]], "name": [f"rec-{r['id']}"]}
+
+    df = spark.range(1000).selectExpr("id")
+    out = str(tmp_path / "pshards")
+    assert tfr.write_tfrecord_shards(df, out, 7, to_features) == 1000
+    blobs = [
+        tfr.frame_record(tfr.encode_example(to_features({"id": i})))
+        for i in range(1000)
+    ]
+    want = {s: Counter() for s in range(7)}
+    for r in spark.createDataFrame(
+        [(b,) for b in blobs], "blob binary"
+    ).selectExpr("blob", "pmod(hash(xxhash64(blob)), 7) AS shard").collect():
+        want[r.shard][bytes(r.blob)[12:-4]] += 1
+    for s in range(7):
+        got = Counter(
+            tfr.read_tfrecords(f"{out}/data-{s:05d}-of-00007.tfrecord")
+        )
+        assert got == want[s], s
+
+
+def test_write_tfrecord_shards_bytes_independent_of_partitioning(
+    spark, tmp_path
+):
+    """The same rows from 1 and from 5 (round-robin shuffled) input
+    partitions give byte-identical shard files: writers sort each
+    shard's blobs, so arrival order never reaches the disk."""
+    import hashlib
+
+    base = spark.range(600).selectExpr("id", "concat('v', id * 7) AS v")
+
+    def digests(df, name):
+        out = str(tmp_path / name)
+        tfr.write_tfrecord_shards(
+            df, out, 9, lambda r: {"id": [r["id"]], "v": [r["v"]]}
+        )
+        return {
+            f.rsplit("/", 1)[1]: hashlib.sha256(open(f, "rb").read()).digest()
+            for f in glob.glob(f"{out}/*.tfrecord")
+        }
+
+    one = digests(base.coalesce(1), "p1")
+    five = digests(base.repartition(5), "p5")
+    assert len(one) == 9 and one == five
+
+
+def test_write_tfrecord_shards_writer_tasks_bounded(spark, tmp_path):
+    """64 shards are written by at most defaultParallelism Python
+    tasks, not one task per shard (read from the job group's stages
+    through the status tracker)."""
+    sc = spark.sparkContext
+    group = f"tfrecord-writer-tasks-{tmp_path.name}"
+    df = spark.range(0, 2000, 1, numPartitions=1).selectExpr("id")
+    sc.setJobGroup(group, "writer task-count guard")
+    try:
+        tfr.write_tfrecord_shards(
+            df, str(tmp_path / "tshards"), 64, lambda r: {"id": [r["id"]]}
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        st.numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(job).stageIds
+        if (st := tracker.getStageInfo(sid)) is not None
+    ]
+    assert tasks and max(tasks) <= sc.defaultParallelism, tasks
+    assert len(glob.glob(str(tmp_path / "tshards" / "*.tfrecord"))) == 64
+
+
+def test_write_tfrecord_shards_rejects_foreign_files(spark, tmp_path):
+    """After the write the directory must hold exactly the expected
+    shard names; anything else fails the sink instead of passing as
+    output."""
+    import pytest
+
+    out = tmp_path / "xshards"
+    out.mkdir()
+    (out / "data-00009-of-00010.tfrecord").write_bytes(b"")
+    df = spark.range(4).selectExpr("id")
+    with pytest.raises(RuntimeError, match="expected exactly the 2"):
+        tfr.write_tfrecord_shards(df, str(out), 2, lambda r: {"id": [r["id"]]})
+    assert not glob.glob(f"{out}/*.tmp-*")
 
 
 def test_write_tfrecord_shards_row_facade(spark, tmp_path):
