@@ -916,7 +916,6 @@ _QCD = 0xFF5C
 _SOT = 0xFF90
 _SOD = 0xFF93
 _EOC = 0xFFD9
-_COM = 0xFF64
 
 _DEFAULT_CBLK = 6  # 64x64 code-blocks (2^6)
 

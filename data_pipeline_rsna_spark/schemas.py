@@ -1,4 +1,4 @@
-"""Explicit StructType schemas for every table the engine touches.
+"""Explicit StructType schemas for the sources the engine reads by hand.
 
 The reference enforces schemas nowhere (CSV columns positional,
 ``generate_images_from_dicom.py:23-30``; dims hardcoded,
@@ -28,134 +28,9 @@ LABELS_CSV = T.StructType(
     ]
 )
 
-# Typed form after ingest (operators/labels.py)
-LABELS = T.StructType(
-    [
-        T.StructField("patient_id", T.StringType(), False),
-        T.StructField("x", T.IntegerType(), True),
-        T.StructField("y", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("target", T.StringType(), False),
-    ]
-)
-
-# F2: multimodal image corpus — binaryFile source + decoded pixel payload.
-# Spark has no tensor type: pixels ride as BinaryType + dtype/shape columns.
-IMAGES = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("patient_id", T.StringType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("pixels", T.BinaryType(), True),
-        T.StructField("dtype", T.StringType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-    ]
-)
-
-# F3/F4: annotation documents (the JSON handoff files of the reference;
-# in-engine these stay DataFrames end-to-end).
-OBJECT_ANNOTATIONS = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField(
-            "boxes", T.ArrayType(T.ArrayType(T.IntegerType())), True
-        ),
-    ]
-)
-
-CAPTION_ANNOTATIONS = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("caption", T.StringType(), True),
-    ]
-)
-
-# F5: label-map dimension table (proto StringIntLabelMapItem).
-LABEL_MAP = T.StructType(
-    [
-        T.StructField("id", T.IntegerType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("display_name", T.StringType(), True),
-    ]
-)
-
 # ---------------------------------------------------------------------------
-# Driver-provided star schema (FIXTURES.md F9) — declared, not inferred.
+# Driver-provided events table (FIXTURES.md F9) — declared, not inferred.
 # ---------------------------------------------------------------------------
-
-REGION = T.StructType(
-    [
-        T.StructField("r_regionkey", T.IntegerType(), False),
-        T.StructField("r_name", T.StringType(), False),
-    ]
-)
-
-NATION = T.StructType(
-    [
-        T.StructField("n_nationkey", T.IntegerType(), False),
-        T.StructField("n_name", T.StringType(), False),
-        T.StructField("n_regionkey", T.IntegerType(), False),
-    ]
-)
-
-CUSTOMER = T.StructType(
-    [
-        T.StructField("c_custkey", T.LongType(), False),
-        T.StructField("c_name", T.StringType(), False),
-        T.StructField("c_nationkey", T.IntegerType(), False),
-        T.StructField("c_acctbal", T.DoubleType(), False),
-        T.StructField("c_mktsegment", T.StringType(), False),
-    ]
-)
-
-SUPPLIER = T.StructType(
-    [
-        T.StructField("s_suppkey", T.LongType(), False),
-        T.StructField("s_name", T.StringType(), False),
-        T.StructField("s_nationkey", T.IntegerType(), False),
-        T.StructField("s_acctbal", T.DoubleType(), False),
-    ]
-)
-
-PART = T.StructType(
-    [
-        T.StructField("p_partkey", T.LongType(), False),
-        T.StructField("p_name", T.StringType(), False),
-        T.StructField("p_brand", T.StringType(), False),
-        T.StructField("p_type", T.StringType(), False),
-        T.StructField("p_size", T.IntegerType(), False),
-        T.StructField("p_retailprice", T.DoubleType(), False),
-    ]
-)
-
-ORDERS = T.StructType(
-    [
-        T.StructField("o_orderkey", T.LongType(), False),
-        T.StructField("o_custkey", T.LongType(), False),
-        T.StructField("o_orderstatus", T.StringType(), False),
-        T.StructField("o_totalprice", T.DoubleType(), False),
-        T.StructField("o_orderdate", T.TimestampType(), False),
-        T.StructField("o_orderpriority", T.StringType(), False),
-    ]
-)
-
-LINEITEM = T.StructType(
-    [
-        T.StructField("l_orderkey", T.LongType(), False),
-        T.StructField("l_partkey", T.LongType(), False),
-        T.StructField("l_suppkey", T.LongType(), False),
-        T.StructField("l_linenumber", T.IntegerType(), False),
-        T.StructField("l_quantity", T.DoubleType(), False),
-        T.StructField("l_extendedprice", T.DoubleType(), False),
-        T.StructField("l_discount", T.DoubleType(), False),
-        T.StructField("l_tax", T.DoubleType(), False),
-        T.StructField("l_returnflag", T.StringType(), False),
-        T.StructField("l_linestatus", T.StringType(), False),
-        T.StructField("l_shipdate", T.TimestampType(), False),
-    ]
-)
 
 # The driver's events parquet has shipped ts in two physical shapes across
 # testdata generations: TIMESTAMP(NANOS) (which Spark's parquet reader only
@@ -198,34 +73,3 @@ EVENTS = T.StructType(
         T.StructField("props", T.StringType(), True),
     ]
 )
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
-STAR_SCHEMA = {
-    "region": REGION,
-    "nation": NATION,
-    "customer": CUSTOMER,
-    "supplier": SUPPLIER,
-    "part": PART,
-    "orders": ORDERS,
-    "lineitem": LINEITEM,
-    "events": EVENTS,
-    "documents": DOCUMENTS,
-    "embeddings": EMBEDDINGS,
-}

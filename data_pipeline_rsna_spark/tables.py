@@ -34,10 +34,6 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Tables small enough to broadcast at any scale factor: the TPC-H dims
-# region/nation are bounded by the world's geography, not by SF.
-BROADCASTABLE_DIMS = frozenset({"region", "nation"})
-
 # Tables whose per-row downstream work is EXPLOSIVE (token/shingle
 # explode, vector arithmetic): a parquet scan's task count is sized by
 # on-disk bytes and row groups, which undercounts post-explode work by

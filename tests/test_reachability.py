@@ -1,9 +1,10 @@
 """Every top-level def in the package has a user outside ``tests/``.
 
 AST only: no Spark, and the package is never imported. A top-level
-function or class counts as used when its name appears outside its own
-body, as a name, an attribute or a string constant (``getattr`` and
-registry lookups go by string), in any non-test Python file of the repo:
+function, class or ``UPPER_CASE`` constant counts as used when its name
+appears outside its own definition, as a name, an attribute or a string
+constant (``getattr`` and registry lookups go by string), in any non-test
+Python file of the repo:
 the package itself, ``tools/``, ``perfbench/``, ``bench.py`` and
 ``__spark_entry__.py``. A ``@register`` decorator marks a query as used.
 Import statements alone do not count, so a re-export from an
@@ -16,11 +17,13 @@ is listed in ``ALLOWED`` with the reason it stays.
 from __future__ import annotations
 
 import ast
+import re
 from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "data_pipeline_rsna_spark"
+CONSTANT = re.compile(r"_?[A-Z][A-Z0-9_]*")
 
 # "<path under the package>:<name>" -> why it stays without a caller
 ALLOWED = {
@@ -84,6 +87,22 @@ def _non_test_sources() -> list[Path]:
     return [p for p in files if p.exists()]
 
 
+def _defined_names(node: ast.stmt) -> list[str]:
+    """Names a top-level statement defines that the check covers."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [] if _is_registered(node) else [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        t.id for t in targets
+        if isinstance(t, ast.Name) and CONSTANT.fullmatch(t.id)
+    ]
+
+
 def _is_registered(node: ast.AST) -> bool:
     for dec in getattr(node, "decorator_list", []):
         fn = dec.func if isinstance(dec, ast.Call) else dec
@@ -109,19 +128,18 @@ def _unused_defs() -> set[str]:
         if PACKAGE not in path.parents:
             continue
         for node in tree.body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) or _is_registered(node):
-                continue
-            outside = [
-                (p, line)
-                for p, line in uses.get(node.name, [])
-                if not (p == path and node.lineno <= line <= node.end_lineno)
-            ]
-            if not outside:
-                unused.add(
-                    f"{path.relative_to(PACKAGE).as_posix()}:{node.name}"
-                )
+            for name in _defined_names(node):
+                outside = [
+                    (p, line)
+                    for p, line in uses.get(name, [])
+                    if not (
+                        p == path and node.lineno <= line <= node.end_lineno
+                    )
+                ]
+                if not outside:
+                    unused.add(
+                        f"{path.relative_to(PACKAGE).as_posix()}:{name}"
+                    )
     return unused
 
 
