@@ -803,47 +803,57 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     """Cluster candidate pairs into duplicate groups: connected
     components by iterative min-label propagation.
 
-    Each round every node adopts the minimum label over its
-    neighborhood INCLUDING ITSELF (the edge set carries a self-loop
-    per node), so one shuffle-join + one aggregate produce the new
-    labels directly — no second left-join back to the old labels
-    (round 12, guide §2.4: the least()/coalesce re-join per round was
-    a second shuffle of the label table). Convergence takes
-    O(component diameter) rounds — near-dup clusters are shallow
-    (stars/cliques), so a handful. Labels are lineage-cut each round
-    so the plan doesn't grow with iterations.
+    The input is evaluated exactly once: ``edges`` is projected to
+    (u, v) and lineage-cut first, so the corpus-sized pipeline behind
+    it (signatures, band self-join, pair aggregate) runs in that one
+    job and every later job reads only edge-sized, cut data. The
+    symmetric edge set — both directions plus one self-loop per node —
+    is built from that cut and cut in turn (a cut, not ``persist()``:
+    no CacheManager entry outlives the call, even on an exception).
 
-    Convergence detection rides the cut's own materialization job via
-    ``observe()`` (round 12, guide §5: the per-round changed-count was
-    a second ACTION — a join of two label tables — per round): labels
-    are per-node non-increasing (the self-loop keeps the old label in
-    the min), so Σ component is strictly decreasing until the fixed
-    point and Σ-unchanged ⇔ no label changed. The sum accumulates in
-    decimal(38,0) — an int64 Σ over billions of 63-bit ids could wrap
-    and alias two different label states.
+    Each round every node adopts the minimum label over its
+    neighborhood INCLUDING ITSELF (the self-loops), so one shuffle-join
+    + one aggregate produce the new labels directly — no second
+    left-join back to the old labels. Starting labels are the node ids
+    themselves, which makes round 1's join a no-op: round 1 is the
+    aggregate ``min(v)`` per ``u`` over the symmetric edges, with no
+    join. Convergence takes O(component diameter) rounds — near-dup
+    clusters are shallow (stars/cliques), so a handful. Labels are
+    lineage-cut each round so the plan doesn't grow with iterations;
+    ``max_iter`` counts round 1.
+
+    Convergence detection rides each cut's own materialization job via
+    ``observe()``, never a second action: labels are per-node
+    non-increasing (the self-loop keeps the old label in the min), so
+    Σ component is strictly decreasing until the fixed point and
+    Σ-unchanged ⇔ no label changed. The starting Σ (Σ node ids) is
+    observed on the symmetric edge cut as Σ u over its self-loops. The
+    sums accumulate in decimal(38,0) — an int64 Σ over billions of
+    63-bit ids could wrap and alias two different label states.
 
     Returns (node, component) where component = min node id reachable.
     """
-    sym = edges.selectExpr(f"{src} AS u", f"{dst} AS v").unionByName(
-        edges.selectExpr(f"{dst} AS u", f"{src} AS v")
-    ).distinct()
-    nodes = sym.select(F.col("u").alias("node")).distinct()
-    sym = sym.unionByName(
-        nodes.selectExpr("node AS u", "node AS v")
-    ).persist()
-    _sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-    obs0 = Observation()
-    labels = (
-        nodes.withColumn("component", F.col("node"))
-        .observe(obs0, _sum)
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    e = edges.selectExpr(f"{src} AS u", f"{dst} AS v").transform(lineage_cut)
+    obs = Observation()
+    sym = (  # both directions plus a self-loop at each endpoint
+        e.unionByName(e.selectExpr("v AS u", "u AS v"))
+        .unionByName(e.selectExpr("u", "u AS v"))
+        .unionByName(e.selectExpr("v AS u", "v"))
+        .distinct()
+        .observe(obs, F.sum(
+            F.when(F.col("u") == F.col("v"), F.col("u").cast("decimal(38,0)"))
+        ).alias("s"))
         .transform(lineage_cut)
     )
-    prev_sum = obs0.get["s"]
+    prev_sum = obs.get["s"]
+    _sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+    nbr = sym.withColumnRenamed("v", "component")
     for _ in range(max_iter):
         obs = Observation()
         labels = (
-            sym.join(labels, sym.v == labels.node)
-            .groupBy("u")
+            nbr.groupBy("u")
             .agg(F.min("component").alias("component"))
             .select(F.col("u").alias("node"), "component")
             .observe(obs, _sum)
@@ -853,7 +863,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    sym.unpersist()
+        nbr = sym.join(labels, sym.v == labels.node)
     return labels
 
 

@@ -11716,15 +11716,22 @@ def q_events_attribution_full_outer_streaming(
     s AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(cents) AS BIGINT) AS sx,
-               CAST(sum(rn * cents) AS BIGINT) AS six
+               CAST(sum(CAST(rn AS DECIMAL(38,0)) * cents)
+                    AS DECIMAL(38,0)) AS six
         FROM ranked
+    ),
+    g AS (
+        SELECT n, sx,
+               CAST(2 * six - CAST(n + 1 AS DECIMAL(38,0)) * sx
+                    AS DECIMAL(38,0)) AS gini_num,
+               CAST(CAST(n AS DECIMAL(38,0)) * sx AS DECIMAL(38,0))
+                   AS gini_den
+        FROM s
     )
-    SELECT n, sx,
-           CAST(2 * six - (n + 1) * sx AS BIGINT) AS gini_num,
-           CAST(n * sx AS BIGINT) AS gini_den,
-           CAST((CAST(2 * six - (n + 1) * sx AS HUGEINT) * 1000000)
-                // (CAST(n AS HUGEINT) * sx) AS BIGINT) AS gini_ppm
-    FROM s
+    SELECT n, sx, gini_num, gini_den,
+           CAST((CAST(gini_num AS HUGEINT) * 1000000)
+                // CAST(gini_den AS HUGEINT) AS BIGINT) AS gini_ppm
+    FROM g
     """,
     doc="X8+ Gini coefficient of supplier revenue concentration — the "
     "companion of the HHI share metric (Gini reads inequality of the "
@@ -11752,24 +11759,25 @@ def q_market_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = ranked.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("sx"),
-        F.sum(F.col("rn").cast("bigint") * F.col("cents"))
-        .cast("bigint")
+        F.sum(F.col("rn").cast("decimal(38,0)") * F.col("cents"))
+        .cast("decimal(38,0)")
         .alias("six"),
     )
+    # six, gini_num and gini_den grow as SF² (n and sx each grow with
+    # SF), so they are decimal(38,0): as int64 they overflowed near sf5
+    # (ANSI ARITHMETIC_OVERFLOW). Measured at sf0.1: gini_den 3.0e15,
+    # gini_num 8.3e13, so the ppm step's gini_num * 1e6 stays inside
+    # decimal(38,0) to about sf1e8. The binding limit is now sx, a
+    # bigint growing linearly (3.0e12 at sf0.1): int64 to about sf3e5.
     return s.selectExpr(
         "n",
         "sx",
-        "CAST(2 * six - (n + 1) * sx AS BIGINT) AS gini_num",
-        # n and sx both grow with SF, so n * sx (and six) grow as SF²:
-        # gini_den is 3.0e15 at sf0.1 (x100 per SF decade from
-        # sf0.001), so this bigint multiply passes int64 near sf5 and
-        # raises ARITHMETIC_OVERFLOW (ANSI)
-        "CAST(n * sx AS BIGINT) AS gini_den",
-        # ppm in decimal(38,0): gini_num carries data-scaled cent
-        # totals, so num*1e6 passes int64 around sf0.1 (caught by the
-        # sf1 gate as an ANSI ARITHMETIC_OVERFLOW — round-7 fix)
-        "CAST((CAST(2 * six - (n + 1) * sx AS DECIMAL(38,0)) * 1000000)"
-        " DIV (CAST(n AS DECIMAL(38,0)) * sx) AS BIGINT) AS gini_ppm",
+        "CAST(2 * six - CAST(n + 1 AS DECIMAL(38,0)) * sx AS DECIMAL(38,0))"
+        " AS gini_num",
+        "CAST(CAST(n AS DECIMAL(38,0)) * sx AS DECIMAL(38,0)) AS gini_den",
+    ).withColumn(
+        "gini_ppm",
+        F.expr("CAST((gini_num * 1000000) DIV gini_den AS BIGINT)"),
     )
 
 

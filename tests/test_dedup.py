@@ -69,32 +69,8 @@ def test_ngram_jaccard(docs):
     assert all({a, b} != {4, 5} for a, b in pairs)
 
 
-def test_connected_components_chain_and_clique(spark):
-    # chain 1-2-3-4 (diameter 3) + disjoint pair 10-11
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
-    )
-    comps = {
-        r.node: r.component
-        for r in dedup.connected_components(edges).collect()
-    }
-    assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-
-def test_connected_components_matches_union_find(spark):
-    """Parity with a Python union-find on a seeded random graph (~60
-    edges) that includes a 12-node chain with its minimum id at one
-    end, so the min label needs 11 propagation rounds to reach the far
-    end. Every node must be labelled with the minimum id of its
-    component."""
-    import random
-
-    rng = random.Random(1729)
-    pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(48)]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    chain = [100] + rng.sample(range(101, 200), 11)
-    pairs += list(zip(chain, chain[1:]))
-
+def _union_find(pairs) -> dict[int, int]:
+    """Reference components: every node mapped to its component's min id."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -108,15 +84,119 @@ def test_connected_components_matches_union_find(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)  # root = min id
-    want = {n: find(n) for n in parent}
+    return {n: find(n) for n in parent}
+
+
+def _propagate(pairs, rounds: int) -> dict[int, int]:
+    """Reference labels after ``rounds`` synchronous rounds of min-label
+    propagation from identity labels (each node keeps the min over its
+    neighbours and itself)."""
+    nbrs: dict[int, set[int]] = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, {a}).add(b)
+        nbrs.setdefault(b, {b}).add(a)
+    labels = {n: n for n in nbrs}
+    for _ in range(rounds):
+        labels = {n: min(labels[m] for m in ns) for n, ns in nbrs.items()}
+    return labels
+
+
+def _components(edges, **kw) -> dict[int, int]:
+    return {
+        r.node: r.component
+        for r in dedup.connected_components(edges, **kw).collect()
+    }
+
+
+def test_connected_components_chain_and_clique(spark):
+    # chain 1-2-3-4 (diameter 3) + disjoint pair 10-11
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
+    )
+    comps = _components(edges)
+    assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+
+
+def test_connected_components_matches_union_find(spark):
+    """Parity with a Python union-find on a seeded random graph (~60
+    edges) that includes a 12-node chain with its minimum id at one
+    end, so the min label needs 11 propagation rounds to reach the far
+    end. Every node must be labelled with the minimum id of its
+    component. ``max_iter`` counts round 1: one round returns exactly
+    the round-1 labels, and 6 rounds stop short of the fixed point."""
+    import random
+
+    rng = random.Random(1729)
+    pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(48)]
+    pairs = [(a, b) for a, b in pairs if a != b]
+    chain = [100] + rng.sample(range(101, 200), 11)
+    pairs += list(zip(chain, chain[1:]))
+    want = _union_find(pairs)
 
     edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    got = {
-        r.node: r.component
-        for r in dedup.connected_components(edges).collect()
-    }
+    got = _components(edges)
     assert got == want
     assert all(got[n] == 100 for n in chain)
+    assert _components(edges, max_iter=1) == _propagate(pairs, 1)
+    cut = _components(edges, max_iter=6)
+    assert cut == _propagate(pairs, 6)
+    assert cut != want
+    with pytest.raises(ValueError):
+        dedup.connected_components(edges, max_iter=0)
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [],
+        [(5, 5), (7, 7)],
+        [(1, 2), (2, 1), (1, 2), (3, 2), (9, 8), (8, 9), (8, 9), (4, 4)],
+    ],
+    ids=["empty", "self_loops_only", "duplicate_and_reversed_pairs"],
+)
+def test_connected_components_degenerate_inputs(spark, pairs):
+    """Degenerate edge sets still match union-find, and columns beyond
+    the two endpoints (the candidate generators' ``n_shared_bands``)
+    are ignored."""
+    edges = spark.createDataFrame(
+        [(a, b, 3) for a, b in pairs],
+        "doc_a long, doc_b long, n_shared_bands int",
+    )
+    assert _components(edges) == _union_find(pairs)
+
+
+def test_connected_components_evaluates_input_once(spark):
+    """The edge input — in production the whole MinHash-LSH candidate
+    pipeline — is evaluated by exactly one job per call, and the call
+    leaves no CacheManager entry behind, even when it fails."""
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)]
+    acc = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        acc.add(1)
+        return x
+
+    src = spark.createDataFrame(pairs, "a long, b long")
+    edges = src.select(
+        F.udf(counted, "long")("a").alias("doc_a"),
+        F.col("b").alias("doc_b"),
+        F.lit(2).alias("n_shared_bands"),
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.numCachedEntries()
+    assert _components(edges) == _union_find(pairs)
+    assert acc.value == len(pairs)
+    assert cache.numCachedEntries() == entries
+
+    def failing(x):
+        raise ValueError("edge source failed")
+
+    broken = src.select(
+        F.udf(failing, "long")("a").alias("doc_a"), F.col("b").alias("doc_b")
+    )
+    with pytest.raises(Exception, match="edge source failed"):
+        dedup.connected_components(broken)
+    assert cache.numCachedEntries() == entries
 
 
 def test_dedup_clusters_planted(spark):

@@ -659,3 +659,28 @@ def test_bootstrap_rejects_sql_breaking_salt(spark):
         st.bootstrap_means(df, F.col("k"), salt="o'boot")
 
 
+
+
+def test_market_gini_past_int64(spark, tmp_path):
+    """Three suppliers with 3.6e18 cents in total: n * sx and
+    (n + 1) * sx pass int64, so the query returns the exact Gini
+    identity only because six, gini_num and gini_den are
+    decimal(38,0)."""
+    from data_pipeline_rsna_spark.queries import REGISTRY
+
+    cents = {1: 10**18, 2: 12 * 10**17, 3: 14 * 10**17}
+    spark.createDataFrame(
+        [(k, c / 100.0, 0.0) for k, c in cents.items()],
+        "l_suppkey long, l_extendedprice double, l_discount double",
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    got = REGISTRY["market_gini_coefficient"].spark_fn(
+        spark, str(tmp_path)
+    ).collect()[0]
+    xs = sorted(cents.values())
+    n, sx = len(xs), sum(xs)
+    six = sum((i + 1) * x for i, x in enumerate(xs))
+    num, den = 2 * six - (n + 1) * sx, n * sx
+    assert den > 2**63 - 1
+    assert (got.n, got.sx, got.gini_num, got.gini_den, got.gini_ppm) == (
+        n, sx, num, den, num * 10**6 // den
+    )
